@@ -108,8 +108,7 @@ def bucket_col(url_col, buckets: int) -> "F.Column":
     (salted repartition, the post-kernel partition column, the resumable
     ledger's bucket key, the streaming sink): resume, MERGE and
     compaction are all keyed on this value, so a drifted copy would
-    silently split a table across two incompatible bucketings (r5
-    review find — it was inlined at four call sites)."""
+    silently split a table across two incompatible bucketings."""
     return F.pmod(F.xxhash64(url_col), F.lit(buckets)).cast("int")
 
 
@@ -211,8 +210,7 @@ def extract_job(
     # externally-built vanilla session the static default would make the
     # partitioned overwrite below truncate the ENTIRE output dir, so a
     # narrowed re-run (subset of buckets, tighter lang_filter) silently
-    # deletes every other bucket's output (r3 review; checkpoint.py
-    # already guards its own write the same way)
+    # deletes every other bucket's output
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     pages = spark.read.parquet(input_path)
     preflight(spark, pages)  # fail fast before any executor work
@@ -220,9 +218,12 @@ def extract_job(
     # cluster by bucket before the partitioned write: without this, every
     # scan-split task can emit one file per bucket → O(tasks × buckets)
     # small files. The shuffle moves only extracted text (html never leaves
-    # the kernel stage), and caps output at salt_buckets files.
+    # the kernel stage). Each bucket hashes to one shuffle partition, so
+    # there is one file per bucket. No partition count: AQE coalesces the
+    # exchange, so write parallelism follows spark.sql.shuffle.partitions
+    # instead of one (mostly idle) task per bucket.
     (
-        result.repartition(cfg.salt_buckets, F.col("bucket"))
+        result.repartition(F.col("bucket"))
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(output_path)

@@ -30,7 +30,7 @@ from dataclasses import dataclass
 from html.parser import HTMLParser
 from typing import List, Optional, Tuple
 
-from .textclean import clean_text
+from .textclean import clean_normalized_lines
 
 # ---------------------------------------------------------------------------
 # SPEC constants — changing any of these is a kernel version change and MUST
@@ -170,9 +170,10 @@ class _BlockParser(HTMLParser):
 # but skips html.parser's per-attribute parse loop and per-token position
 # bookkeeping (updatepos), which profiling shows is ~70% of kernel time —
 # this engine never reads attributes. It reuses the stdlib's own compiled
-# (linear-time) regexes, and test_kernel_fast_matches_stdlib asserts
-# segment-level equivalence against the stdlib-driven parser on the fixture
-# corpus and randomized html-ish inputs.
+# (linear-time) regexes, plus two of its own for plain tags and pruned
+# subtrees, and tests/test_properties.py asserts segment-level equivalence
+# against the stdlib-driven parser on the fixture corpus and randomized
+# html-ish inputs.
 # ---------------------------------------------------------------------------
 
 import html.parser as _hp
@@ -199,6 +200,52 @@ _MARKED_CLOSE_MS = re.compile(r"]\s*>")
 _SECT_STD = frozenset({"temp", "cdata", "ignore", "include", "rcdata"})
 _SECT_MS = frozenset({"if", "else", "endif"})
 
+# Plain tags, the common case, are matched by one regex call each. Within
+# these forms the stdlib patterns of the general path in _fused_segments
+# reach the same end, so both paths agree on where a tag ends and whether
+# it self-closes:
+#   - `<name>`, `<name/>`: tagfind_tolerant's name and trailing run, then
+#     `>` or `/>`;
+#   - `<name attr=value ...>`: ASCII whitespace before each attribute,
+#     attribute names without quotes, `=` or `<`, values either quoted
+#     with no `<` or `>` inside or bare with no quote, `<` or `>`. Such a
+#     tag ends at its first `>`, and locatestarttagend_tolerant walks the
+#     same attributes one by one and stops at the same `>` or `/>`;
+#   - `</name>`: endtagfind.
+_WS = r"[\t\n\r\f ]"
+_START_BARE = r"(?>%s)(/?)>" % _TAGNAME.pattern
+_START_ATTRS = (
+    r"""([a-zA-Z][^\s/>\x00<"'=]*+)"""
+    r"""(?:%(ws)s+[^\s/>"'=<]++"""
+    r"""(?:%(ws)s*=%(ws)s*(?:"[^"<>]*"|'[^'<>]*'|[^\s"'=<>][^\s"'<>]*+))?)++"""
+    r"%(ws)s*(/?)>"
+) % {"ws": _WS}
+_PLAIN_TAG = re.compile(
+    r"%s|<(?:%s|%s)" % (_ENDTAG.pattern, _START_BARE, _START_ATTRS)
+)
+
+# Inside a pruned subtree, text and tags change nothing but the parse
+# position, so _fused_segments consumes a run of them with one regex call.
+# The run stops, and the per-token loop takes over, at anything that can
+# change the prune state or whose extent is ambiguous:
+#   - a start or end tag whose name begins with a PRUNE_TAGS name, in any
+#     case (`</ nav>` too: endtagfind allows the space);
+#   - `<!` (comments, doctype, marked sections) and `<?`;
+#   - a start tag that is not plain (see above), e.g. one with a quote
+#     left open before `<` or `>`.
+# An end tag is consumed up to its first `>`, as on every branch of the
+# loop; it changes nothing unless its name is the innermost prune tag.
+
+_PRUNE_NAME = "(?i:%s)" % "|".join(sorted(PRUNE_TAGS))
+_PRUNED_RUN = re.compile(
+    r"(?:[^<]+|<(?![a-zA-Z/!?])|</(?!\s*%(prune)s)[^>]*>|<(?!%(prune)s)(?:%(tag)s))*+"
+    % {
+        "prune": _PRUNE_NAME,
+        # groups make no difference to what the run consumes
+        "tag": "%s|%s" % (_START_BARE, _START_ATTRS),
+    }
+)
+
 
 def _fused_segments(s: str, norm=_normalize) -> List[Tuple[str, str, str]]:
     """Single-pass tokenize + block-segment of ``s`` — the production hot
@@ -221,7 +268,8 @@ def _fused_segments(s: str, norm=_normalize) -> List[Tuple[str, str, str]]:
         nonlocal pieces, link_pieces
         text = norm("".join(pieces))
         if text:
-            segments.append((tag_for_segment, text, norm("".join(link_pieces))))
+            link = norm("".join(link_pieces)) if link_pieces else ""
+            segments.append((tag_for_segment, text, link))
         pieces = []
         link_pieces = []
 
@@ -283,6 +331,10 @@ def _fused_segments(s: str, norm=_normalize) -> List[Tuple[str, str, str]]:
             i = m.end()
             cdata_close = None
             continue
+        if prune_stack:
+            i = _PRUNED_RUN.match(s, i).end()
+            if i >= n:
+                break
         j = s.find("<", i)
         if j < 0:
             emit_data(s[i:])
@@ -299,41 +351,31 @@ def _fused_segments(s: str, norm=_normalize) -> List[Tuple[str, str, str]]:
             # unprocessed tail as data
             emit_data("<")
             break
-        c = s[j + 1]
-        if ("a" <= c <= "z") or ("A" <= c <= "Z"):
-            m = _TAGNAME.match(s, j + 1)
-            tag = m.group(1).lower()
-            # attr-less fast path: tagfind_tolerant consumes trailing
-            # whitespace/non-closing slashes, so for `<p>`, `<p >`, `<br/>`
-            # the next chars are the tag close — skip the attribute regex
-            end = m.end()
-            if not (s.startswith(">", end) or s.startswith("/>", end)):
-                end = _STARTTAG_END.match(s, j).end()
+        m = _PLAIN_TAG.match(s, j)
+        if m:
+            close, tag, slash, atag, aslash = m.groups()
+            i = m.end()
+            if close is not None:  # end_tag inlined: every endtagfind match
+                tag = close.lower()
+                if prune_stack:
+                    if tag == prune_stack[-1]:
+                        prune_stack.pop()
+                elif tag in BLOCK_TAGS:
+                    flush(tag)
+                    segment_tag = "body"
+                elif tag == "a" and anchor_depth > 0:
+                    anchor_depth -= 1
+                continue
+            if tag is None:
+                tag, slash = atag, aslash
+        elif ("a" <= s[j + 1] <= "z") or ("A" <= s[j + 1] <= "Z"):
+            # start tag outside the plain forms: the stdlib attribute scan
+            tag = _TAGNAME.match(s, j + 1).group(1)
+            end = _STARTTAG_END.match(s, j).end()
             if s.startswith(">", end):
-                # inlined handle_starttag
-                if tag in PRUNE_TAGS:
-                    prune_stack.append(tag)
-                elif not prune_stack:
-                    if tag in BLOCK_TAGS:
-                        flush(segment_tag)
-                        segment_tag = tag
-                    elif tag == "a":
-                        anchor_depth += 1
-                    elif tag == "br":
-                        pieces.append(" ")
-                i = end + 1
-                if tag in _CDATA_CLOSE:
-                    cdata_close = _CDATA_CLOSE[tag]
+                slash, i = "", end + 1
             elif s.startswith("/>", end):
-                # inlined handle_startendtag (self-closing prune tag has
-                # no subtree, so no prune push; no anchor handling)
-                if tag not in PRUNE_TAGS and not prune_stack:
-                    if tag in BLOCK_TAGS:
-                        flush(segment_tag)
-                        segment_tag = tag
-                    elif tag == "br":
-                        pieces.append(" ")
-                i = end + 2
+                slash, i = "/", end + 2
             else:
                 # malformed start tag (stdlib check_for_whole_start_tag):
                 # at EOF / mid-attribute / stray '/', fall back to the
@@ -352,13 +394,9 @@ def _fused_segments(s: str, norm=_normalize) -> List[Tuple[str, str, str]]:
                         if anchor_depth:
                             link_pieces.append(seg)
                     i = end
-            continue
-        if s.startswith("</", j):
-            e = _ENDTAG.match(s, j)
-            if e:
-                end_tag(e.group(1).lower())
-                i = e.end()
                 continue
+        elif s.startswith("</", j):
+            # end tag that endtagfind rejected (_PLAIN_TAG tried it)
             gt = s.find(">", j + 1)
             if gt < 0:  # incomplete at EOF
                 i = emit_incomplete(j)
@@ -370,11 +408,11 @@ def _fused_segments(s: str, norm=_normalize) -> List[Tuple[str, str, str]]:
             else:  # '</>' or bogus comment '</;...>': skipped (no hook used)
                 i = gt + 1
             continue
-        if s.startswith("<!--", j):
+        elif s.startswith("<!--", j):
             m = _COMMENT_CLOSE.search(s, j + 4)
             i = emit_incomplete(j) if not m else m.end()
             continue
-        if s.startswith("<![", j):
+        elif s.startswith("<![", j):
             # marked section (stdlib parse_marked_section)
             nm = _SECT_NAME.match(s, j + 3)
             sect = nm.group().lower() if nm else None
@@ -386,12 +424,38 @@ def _fused_segments(s: str, norm=_normalize) -> List[Tuple[str, str, str]]:
                 m = None
             i = emit_incomplete(j) if not m else m.end()
             continue
-        if s.startswith("<?", j) or s.startswith("<!", j):
+        elif s.startswith("<?", j) or s.startswith("<!", j):
             nxt = s.find(">", j + 2)
             i = emit_incomplete(j) if nxt < 0 else nxt + 1
             continue
-        emit_data("<")
-        i = j + 1
+        else:
+            emit_data("<")
+            i = j + 1
+            continue
+        tag = tag.lower()
+        if slash:
+            # inlined handle_startendtag (self-closing prune tag has no
+            # subtree, so no prune push; no anchor handling)
+            if tag not in PRUNE_TAGS and not prune_stack:
+                if tag in BLOCK_TAGS:
+                    flush(segment_tag)
+                    segment_tag = tag
+                elif tag == "br":
+                    pieces.append(" ")
+            continue
+        # inlined handle_starttag
+        if tag in PRUNE_TAGS:
+            prune_stack.append(tag)
+        elif not prune_stack:
+            if tag in BLOCK_TAGS:
+                flush(segment_tag)
+                segment_tag = tag
+            elif tag == "a":
+                anchor_depth += 1
+            elif tag == "br":
+                pieces.append(" ")
+        if tag in _CDATA_CLOSE:
+            cdata_close = _CDATA_CLOSE[tag]
 
     flush(segment_tag)
     return segments
@@ -428,7 +492,7 @@ def detect_encoding(raw: bytes) -> str:
             # no utf-32 label at all; same impossibility argument). Compare
             # the CANONICAL codec name, not the raw label: the registry
             # also accepts aliases like 'utf16'/'u16'/'u32' that a prefix
-            # check on the label would miss (r3 review fix).
+            # check on the label would miss.
             if codecs.lookup(label).name.startswith(("utf-16", "utf-32")):
                 return "utf-8"
             return label
@@ -444,10 +508,30 @@ def _decode(html) -> str:
             raw = raw[:MAX_HTML_BYTES]
         return raw.decode(detect_encoding(raw), errors="replace")
     # string payloads get the SAME cap (in chars — same order of bound):
-    # a multi-hundred-MB str previously bypassed the truncation guard and
-    # could stall the worker the guard exists to protect (r3 review fix)
+    # an uncapped multi-hundred-MB str would stall the worker the guard
+    # exists to protect
     s = str(html)
     return s[:MAX_HTML_BYTES] if len(s) > MAX_HTML_BYTES else s
+
+
+def _segments(html, preserve_spaces: bool, use_fast: bool = True):
+    """(tag, text, link_text) per block of ``html``, document order."""
+    s = _decode(html)
+    norm = _normalize_preserve if preserve_spaces else _normalize
+    if use_fast:
+        return _fused_segments(s, norm)
+    parser = _BlockParser(preserve_spaces=preserve_spaces)
+    parser.feed(s)
+    parser.close()
+    return parser.segments
+
+
+def _score(tag: str, n: int, link_text: str) -> Tuple[float, bool]:
+    """(link density, kept) of a block of ``n`` > 0 chars — THE keep rule.
+    The density is rounded to 6 dp before the comparison, as stored."""
+    density = round(min(1.0, len(link_text) / n), 6)
+    min_chars = MIN_HEADING_CHARS if tag in HEADING_TAGS else MIN_TEXT_CHARS
+    return density, density < MAX_LINK_DENSITY and n >= min_chars
 
 
 def extract_spans(
@@ -463,25 +547,25 @@ def extract_spans(
     ``preserve_spaces`` is the reference ``preserve_interword_spaces``
     analog (config.json:8): literal space runs inside a block survive.
     """
-    if _use_fast:
-        segments = _fused_segments(
-            _decode(html),
-            _normalize_preserve if preserve_spaces else _normalize,
-        )
-    else:
-        parser = _BlockParser(preserve_spaces=preserve_spaces)
-        parser.feed(_decode(html))
-        parser.close()
-        segments = parser.segments
-
     blocks: List[Block] = []
-    for i, (tag, text, link_text) in enumerate(segments):
+    for i, (tag, text, link_text) in enumerate(
+        _segments(html, preserve_spaces, _use_fast)
+    ):
         n = len(text)
-        density = round(min(1.0, len(link_text) / n), 6) if n else 0.0
-        min_chars = MIN_HEADING_CHARS if tag in HEADING_TAGS else MIN_TEXT_CHARS
-        kept = density < MAX_LINK_DENSITY and n >= min_chars
-        blocks.append(Block(i, tag, text, n, density, kept))
+        blocks.append(Block(i, tag, text, n, *_score(tag, n, link_text)))
     return blocks
+
+
+def _main_text(html, preserve_spaces: bool) -> Tuple[str, int]:
+    """(cleaned main text, kept-block count) straight from the segments,
+    without building Blocks. Segment text is never empty (the tokenizer
+    drops empty blocks), and cleaning the joined kept blocks reduces to
+    the colon collapse (textclean.clean_normalized_lines)."""
+    kept = []
+    for tag, text, link_text in _segments(html, preserve_spaces):
+        if _score(tag, len(text), link_text)[1]:
+            kept.append(text)
+    return clean_normalized_lines("\n".join(kept)), len(kept)
 
 
 def extract_main_text(html, preserve_spaces: bool = False) -> str:
@@ -491,10 +575,7 @@ def extract_main_text(html, preserve_spaces: bool = False) -> str:
     layout-ordered output joined per batch, ocr.py:153), then the reference's
     exact text normalization (textclean.clean_text, ocr.py:141-149).
     """
-    kept = [
-        b.text for b in extract_spans(html, preserve_spaces=preserve_spaces) if b.kept
-    ]
-    return clean_text("\n".join(kept))
+    return _main_text(html, preserve_spaces)[0]
 
 
 def extract_record(url: Optional[str], html, preserve_spaces: bool = False) -> dict:
@@ -508,20 +589,17 @@ def extract_record(url: Optional[str], html, preserve_spaces: bool = False) -> d
     if html is None:
         return {"url": url, "extracted_text": None, "n_blocks": 0, "n_chars": 0, "error": "null_html"}
     try:
-        # bytes measured in bytes, str in chars — both routes through
-        # _decode's cap, both flagged (r3 review: str payloads previously
-        # parsed unbounded and unflagged)
+        # bytes measured in bytes, str in chars: both go through _decode's
+        # cap, and both are flagged
         truncated = (
             isinstance(html, (bytes, bytearray, memoryview, str))
             and len(html) > MAX_HTML_BYTES
         )
-        blocks = extract_spans(html, preserve_spaces=preserve_spaces)
-        kept = [b for b in blocks if b.kept]
-        text = clean_text("\n".join(b.text for b in kept))
+        text, n_kept = _main_text(html, preserve_spaces)
         return {
             "url": url,
             "extracted_text": text,
-            "n_blocks": len(kept),
+            "n_blocks": n_kept,
             "n_chars": len(text),
             "error": "truncated" if truncated else None,
         }

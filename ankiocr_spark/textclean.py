@@ -28,16 +28,32 @@ def clean_text(text: str) -> str:
     return _COLON_RUN.sub(":", cleaned)
 
 
+def clean_normalized_lines(text: str) -> str:
+    """``clean_text`` for text whose lines are already stripped and
+    non-empty — kernel-normalized blocks joined with "\\n" — where the
+    strip and blank-line filter have nothing to do (see CONTRACT below)."""
+    return _COLON_RUN.sub(":", text) if "::" in text else text
+
+
 # Spark-SQL-expressible equivalent (used by oracle checks; see ops.py).
 # Kept here so the Python and SQL forms live side by side and drift is caught
 # by tests/test_textclean.py::test_sql_form_matches.
 #
-# CONTRACT (r3 review): equivalent to clean_text only on text whose line
-# breaks are '\n' and whose intra-line whitespace is plain spaces — i.e.
+# CONTRACT: equivalent to clean_text only on text whose line breaks are
+# '\n' and whose intra-line whitespace is plain spaces — i.e.
 # kernel-normalized block text, the only thing the engine feeds it. On raw
 # text they diverge: Python splitlines() also breaks on \r/\x0b/  and
 # str.strip() eats tabs, while SQL split('\n')/trim() do not. Do NOT apply
 # the SQL form to un-normalized text.
+#
+# The same property is why clean_normalized_lines (the colon collapse
+# alone) equals clean_text on the kernel's joined kept blocks: block
+# normalization turns every character str.isspace() accepts — which
+# covers every line break splitlines() knows — into a space (or, with
+# preserve_interword_spaces, keeps only literal spaces), then strips the
+# ends, and the kernel drops empty blocks. Each block is therefore one
+# line, already stripped and non-empty, and clean_text's
+# split/strip/filter returns the joined text unchanged.
 CLEAN_TEXT_SQL_TEMPLATE = (
     "regexp_replace("
     "  array_join(filter(transform(split({col}, '\\n'), x -> trim(x)), x -> x != ''), '\\n'),"

@@ -73,20 +73,127 @@ def test_clean_text_idempotent(s):
     assert "::" not in once
 
 
+# Inputs aimed at the pruned-subtree skip (kernel._PRUNED_RUN) and the
+# plain-tag fast path (kernel._PLAIN_TAG): quoted `</nav>` and `>` inside
+# attribute values, unbalanced quotes, nested and mismatched prune tags,
+# comments and marked sections, mixed case, script/style inside nav,
+# whitespace the attribute grammar must not accept, truncated tags.
+_PRUNE_TOKENS = (
+    ["<nav>", "</nav>", "<NaV>", "</nAv >", "</ nav>", "<nav/>", "</nav x>",
+     "<navx>", "</navx>", "<form>", "</form>", "<header>", "</header>",
+     "<head>", "</head>", "<aside>", "</aside>", "<footer>", "</FOOTER>",
+     "<title>", "</title x>", "<svg>", "</svg>", "<select>", "</select>",
+     "<template>", "</template>", "<ScRiPt>", "</sCrIpT>", "<STYLE>",
+     "<a title=\"</nav>\">", "<a title='x>y'>", "<div data-x=\"a>b\">",
+     "<input value=\"</form>\">", "</p x=\">\">", "</a <nav>", "<a <nav>",
+     "<a href=\"x>", "<a href='x>", "<a b=\"c d=\">", "\"", "'", "=",
+     "<a b=c\"d>", "<a b=\"c\"d>", "<a b = \"c\">", "<a b=>", "<a b==c>",
+     "<a href=x/>", "<p class=\"c\" />", "<br clear/>", "<a b='c' d>",
+     "<DIV CLASS=x>", "<A HREF=x>", "</A>", "<p a='1' b=\"2\" c=3 d>",
+     "<img src=\"a.png\" alt='x'/>", "<a/b>", "<a / >", "<a\x00>",
+     "<li\x0b>", "<li\xa0x=1>", "<li\xa0x=\"a b\">", "<p\x0bclass='a b'>",
+     "<a\tb='c'\n>", "<!--", "-->", "<!-- </nav> -->", "<![CDATA[", "]]>",
+     "<![CDATA[</nav>]]>", "<!DOCTYPE html>", "<?php ?>", "<!x>", "</>",
+     "</ >", "</", "<nav", "<a href=\"/x", "</na", "<di", "::", ":"]
+)
+_prune_tagish = st.sampled_from(_PRUNE_TOKENS)
+_pruned_chunk = st.one_of(_prune_tagish, _tagish, _textish)
+_pruned_region = st.tuples(
+    st.sampled_from(["<nav>", "<NAV>", "<form>", "<header>", "<aside>", "<head>"]),
+    st.lists(_pruned_chunk, max_size=12).map("".join),
+    st.sampled_from(["</nav>", "</Nav >", "</form>", "</header>", "</aside>", ""]),
+).map("".join)
+_pruned_htmlish = (
+    st.lists(st.one_of(_pruned_region, _pruned_chunk), min_size=1, max_size=12)
+    .map("".join)
+    # cut anywhere, so tags and quotes are also truncated at end of input
+    .flatmap(lambda s: st.integers(0, len(s)).map(lambda k: s[:k]))
+)
+_pruned_payload = st.one_of(
+    _pruned_htmlish.map(lambda s: s.encode("utf-8", errors="ignore")), _pruned_htmlish
+)
+
+
+def _assert_fast_matches_stdlib(payload):
+    """The fast tokenizer must produce the same scored blocks as the
+    stdlib-parser reference path, in both whitespace modes. The stdlib
+    parser itself CRASHES on some malformed inputs (e.g. b'<![0' →
+    AssertionError in _markupbase._scan_name); the fast path must still
+    succeed there, so those inputs pass the robustness half only."""
+    for preserve in (False, True):
+        fast = extract_spans(payload, preserve_spaces=preserve)  # never raises
+        try:
+            slow = extract_spans(payload, _use_fast=False, preserve_spaces=preserve)
+        except Exception:
+            continue  # stdlib crashed; fast path already proved more robust
+        assert fast == slow, preserve
+
+
+@given(st.lists(st.one_of(st.text(max_size=30), st.text(" :\t\n\r\x0b\x85\u2028ab", max_size=30))))
+@settings(**SETTINGS)
+def test_colon_collapse_is_clean_text_on_normalized_blocks(raw_blocks):
+    """textclean CONTRACT: on kernel-normalized block text joined with
+    "\\n", clean_text reduces to the colon collapse (either mode)."""
+    from ankiocr_spark.kernel import _normalize, _normalize_preserve
+    from ankiocr_spark.textclean import clean_normalized_lines
+
+    for norm in (_normalize, _normalize_preserve):
+        text = "\n".join(b for b in map(norm, raw_blocks) if b)
+        assert clean_normalized_lines(text) == clean_text(text)
+
+
 @given(_payload)
 @settings(**SETTINGS)
 def test_fast_tokenizer_matches_stdlib_parser(payload):
-    """The fast tokenizer (kernel._fast_feed) must produce the same scored
-    blocks as the stdlib-parser reference path on html-ish input. The
-    stdlib parser itself CRASHES on some malformed inputs (e.g. b'<![0' →
-    AssertionError in _markupbase._scan_name); the fast path must still
-    succeed there, so those inputs pass the robustness half only."""
-    fast = extract_spans(payload, _use_fast=True)  # must never raise
-    try:
-        slow = extract_spans(payload, _use_fast=False)
-    except Exception:
-        return  # stdlib crashed; fast path already proved more robust
-    assert fast == slow
+    _assert_fast_matches_stdlib(payload)
+
+
+@given(_pruned_payload)
+@settings(max_examples=300, deadline=None)
+def test_fast_tokenizer_matches_stdlib_in_pruned_subtrees(payload):
+    _assert_fast_matches_stdlib(payload)
+
+
+def test_fast_tokenizer_matches_stdlib_on_every_pruned_token():
+    """Each targeted token, with text on both sides, in body text, inside
+    a pruned subtree, nested inside a second prune tag, and at end of
+    input — the fuzz above samples these, this pins every one."""
+    for tok in _PRUNE_TOKENS:
+        for doc in (
+            f"<p>text before the token {tok} and text after it</p>",
+            f"<nav>pruned {tok} pruned</nav><p>visible paragraph of text</p>",
+            f"<nav><form>a {tok} b</nav>c</form>d</nav><p>visible text again</p>",
+            f"<aside><p>x</p>{tok}",
+        ):
+            _assert_fast_matches_stdlib(doc)
+            _assert_fast_matches_stdlib(doc.encode("utf-8"))
+
+
+def _assert_text_record_matches_spans(payload):
+    """The text-mode record (text, n_blocks, n_chars, error) equals text
+    mode spelled out over the span path — clean_text over the kept
+    blocks — in both whitespace modes."""
+    for preserve in (False, True):
+        r = extract_record("u", payload, preserve_spaces=preserve)
+        kept = [b.text for b in extract_spans(payload, preserve_spaces=preserve) if b.kept]
+        text = clean_text("\n".join(kept))
+        assert (r["extracted_text"], r["n_blocks"], r["n_chars"], r["error"]) == (
+            text, len(kept), len(text), None
+        ), preserve
+
+
+@given(st.one_of(_payload, _pruned_payload))
+@settings(**SETTINGS)
+def test_text_record_matches_spans_and_clean_text(payload):
+    _assert_text_record_matches_spans(payload)
+
+
+def test_text_record_matches_spans_and_clean_text_on_fixtures():
+    from ankiocr_spark.fixtures import gen_rows
+
+    for r in gen_rows(400, seed=11):
+        if r["html"] is not None:
+            _assert_text_record_matches_spans(r["html"])
 
 
 def test_cdata_close_lookalikes_stay_raw():
@@ -120,11 +227,8 @@ def test_fast_tokenizer_matches_stdlib_on_fixtures():
     from ankiocr_spark.fixtures import gen_rows
 
     for r in gen_rows(400, seed=11):
-        if r["html"] is None:
-            continue
-        assert extract_spans(r["html"], _use_fast=True) == extract_spans(
-            r["html"], _use_fast=False
-        ), r["url"]
+        if r["html"] is not None:
+            _assert_fast_matches_stdlib(r["html"])
 
 
 # --- anchor parser properties ------------------------------------------------
